@@ -226,10 +226,11 @@ def term_buckets(corpus: Corpus):
 
 
 # term pattern per shape: H = hot (df above the 5% gate), C = cold
-# (df far below it). match_or is all-cold so the single-clause WAND
-# route fires; match_and is all-hot so it stays on the exhaustive plan.
-PATTERNS = {"match_or": "CC", "match_and": "HH", "bool": "HCC",
-            "bm25": "HC", "wand_text": "CCH"}
+# (df far below it). match_and is all-hot, so the single-clause gate
+# stays shut and it runs the exhaustive plan. match_or has no pattern:
+# it reuses two C terms of earlier queries in its stream (below).
+PATTERNS = {"match_and": "HH", "bool": "HCC", "bm25": "HC",
+            "wand_text": "CCH"}
 EXPAND_MATCHES = (2, 20)  # vocabulary words a prefix probe may expand to
 REPEAT_SHARE = 0.25       # queries that repeat an earlier one of their shape
 
@@ -247,7 +248,16 @@ def query_stream(seed: int, corpus: Corpus, n: int,
     expand to a bounded number of vocabulary words. A ``REPEAT_SHARE``
     of queries repeat an earlier query of their shape, as popular
     queries do in search logs, so queries whose terms were all seen
-    before (warm driver term caches) occur beside cold ones."""
+    before (warm driver term caches) occur beside cold ones.
+
+    ``Index.search`` routes a single-clause match to block-max WAND only
+    when every term's df is already in the reader's driver cache and
+    all sit under the 5% gate (``Index._route_wand``); a first-seen
+    term always runs the exhaustive plan. So ``match_or`` draws both
+    terms from the C terms of earlier queries in the stream (which
+    resolve them on the same reader), and the first block issues
+    ``match_or`` last so such terms exist. Whether the route was taken
+    is recorded per query (``probes.took_route``)."""
     import bisect
 
     rng = np.random.default_rng([seed, 3, stream])
@@ -276,10 +286,14 @@ def query_stream(seed: int, corpus: Corpus, n: int,
 
     out = []
     by_shape: Dict[str, List[dict]] = {}
+    resolved: Dict[str, None] = {}  # C terms of earlier queries, in order
     order: List[str] = []
     for _ in range(n):
         if not order:
             order = [SHAPES[i] for i in rng.permutation(len(SHAPES))]
+            if not out:  # pop() takes from the end: match_or goes last
+                order.remove("match_or")
+                order.insert(0, "match_or")
         shape = order.pop()
         earlier = by_shape.setdefault(shape, [])
         if earlier and rng.random() < REPEAT_SHARE:
@@ -293,9 +307,15 @@ def query_stream(seed: int, corpus: Corpus, n: int,
             w = pick(cold)
             i = int(rng.integers(len(w)))
             terms = [w[:i] + ("x" if w[i] != "x" else "y") + w[i + 1:]]
+        elif shape == "match_or":
+            pool = list(resolved)
+            terms = [pool[int(i)]
+                     for i in rng.choice(len(pool), 2, replace=False)]
         else:
             terms = [pick(hot if c == "H" else cold)
                      for c in PATTERNS[shape]]
+            resolved.update((t, None) for t, c in zip(terms, PATTERNS[shape])
+                            if c == "C")
         earlier.append({"shape": shape, "terms": terms,
                         "text": " ".join(terms)})
         out.append(earlier[-1])
@@ -305,7 +325,7 @@ def query_stream(seed: int, corpus: Corpus, n: int,
 def to_dsl(q: dict) -> dict:
     """The DSL map for a query spec (shapes that go through ``search``)."""
     s, t, text = q["shape"], q["terms"], q["text"]
-    if s in ("match_or", "bm25"):
+    if s == "match_or":
         return {"query": {"match": {"text": text}}}
     if s == "match_and":
         return {"query": {"match": {"text": {"query": text,

@@ -12,12 +12,11 @@ from typing import Dict, List, Tuple
 
 import numpy as np
 
+from .gen import SHAPES
 from .workloads import Run
 
 # the phase of single-client reads behind query_cpu_ms and query_p50_ms
 READ_PHASE = {"serve": "A", "live_ingest": "R"}
-SHAPES = ("match_or", "match_and", "bool", "bm25", "wand_text", "phrase",
-          "fuzzy", "expand")
 # save(timings=) keys -> per-layer names
 BUILD_TIMINGS = {
     "ingest_wall_sec": "build.ingest_wall_s",
@@ -44,11 +43,13 @@ END_TO_END: List[Tuple[str, str]] = [
     ("index_bytes_per_text_byte", "ratio"),
     ("peak_rss_mb", "MB"),
     ("query_cpu_ms", "ms"),
+    ("concurrent_cpu_ms", "ms"),
     ("commit_cpu_ms", "ms"),
 ]
 # wall-clock user metrics; on a host whose CPU steal swings between runs
 # they spread too widely to bound, so they are reported per layer
 WALL: List[Tuple[str, str]] = [
+    ("setup_s", "s"),
     ("build_turns_per_s", "turns/s"),
     ("query_p50_ms", "ms"),
     ("query_p90_ms", "ms"),
@@ -79,6 +80,15 @@ def shape_geomean(queries: List[dict], key: str) -> float:
     return statistics.geometric_mean(meds) if meds else float("nan")
 
 
+def routed_fracs(queries: List[dict]) -> Dict[str, float]:
+    """Share of the queries, and of the match_or queries, that ran on
+    block-max WAND."""
+    mor = [q["routed"] for q in queries if q["shape"] == "match_or"]
+    return {"search.routed_frac": (sum(q["routed"] for q in queries)
+                                   / max(len(queries), 1)),
+            "search.match_or_routed_frac": sum(mor) / max(len(mor), 1)}
+
+
 def end_to_end(run: Run, workload: str,
                peak_rss_mb: float) -> Dict[str, float]:
     reads = [q for q in run.queries if q["phase"] == READ_PHASE[workload]]
@@ -88,6 +98,7 @@ def end_to_end(run: Run, workload: str,
         "index_bytes_per_text_byte": run.m["index_bytes_per_text_byte"],
         "peak_rss_mb": peak_rss_mb,
         "query_cpu_ms": shape_geomean(reads, "cpu_ms"),
+        "concurrent_cpu_ms": run.m["concurrent_cpu_ms"],
         "commit_cpu_ms": _p50([c["cpu_s"] * 1e3 for c in run.commits]),
     }
 
@@ -98,6 +109,7 @@ def wall(run: Run, workload: str) -> Dict[str, float]:
     turns = sum(c["turns"] for c in run.commits)
     write_ms = sum(c["commit_ms"] for c in run.commits)
     return {
+        "setup_s": run.m["setup_wall_s"],
         "build_turns_per_s": run.m["turns"] / run.m["build_s"],
         "query_p50_ms": pct(reads, 0.5),
         "query_p90_ms": pct(reads, 0.9),
@@ -120,7 +132,9 @@ PER_LAYER: List[Tuple[str, str]] = (
     + [("dsl.plan_ms", "ms"), ("search.exec_ms", "ms")]
     + [("search.%s_ms" % s, "ms") for s in SHAPES]
     + [("search.cold_term_p50_ms", "ms"), ("search.warm_term_p50_ms", "ms"),
-       ("search.cold_term_frac", "fraction")]
+       ("search.cold_term_frac", "fraction"),
+       ("search.routed_frac", "fraction"),
+       ("search.match_or_routed_frac", "fraction")]
     + [("spark.jobs_per_query", "count"), ("spark.stages_per_query", "count"),
        ("spark.tasks_per_query", "count"), ("spark.jobs_per_commit", "count")]
     + [("host.busy_frac", "fraction"), ("host.steal_frac", "fraction")]
@@ -128,7 +142,8 @@ PER_LAYER: List[Tuple[str, str]] = (
     + [("referee.oracle_bm25_rate", "fraction"),
        ("referee.oracle_elasticlunr_rate", "fraction"),
        ("referee.error_rate", "fraction"),
-       ("referee.query_samples", "count")]
+       ("referee.query_samples", "count"),
+       ("referee.routed_checked", "count")]
     + [("wall.%s" % n, u) for n, u in WALL]
     + [("traced.%s" % n, u) for n, u in END_TO_END]
 )
@@ -168,6 +183,7 @@ def per_layer(run: Run, workload: str, e2e: Dict[str, float],
     out["search.cold_term_p50_ms"] = _p50(cold)
     out["search.warm_term_p50_ms"] = _p50(warm)
     out["search.cold_term_frac"] = len(cold) / max(len(reads), 1)
+    out.update(routed_fracs(reads))
     q = tr.spark_per_op("op.query")
     c = tr.spark_per_op("op.commit")
     out.update({"spark.jobs_per_query": q.get("jobs", 0.0),
@@ -183,6 +199,7 @@ def per_layer(run: Run, workload: str, e2e: Dict[str, float],
     out["referee.oracle_elasticlunr_rate"] = oracle["elasticlunr"]
     out["referee.error_rate"] = run.failed / max(run.attempted, 1)
     out["referee.query_samples"] = len(reads)
+    out["referee.routed_checked"] = run.m["referee_routed"]
     for n, v in wall(run, workload).items():
         out["wall.%s" % n] = v
     for n, _u in END_TO_END:

@@ -1,4 +1,5 @@
-"""Host and process probes read from /proc and the file system."""
+"""Host and process probes read from /proc and the file system, and
+the engine-route probe."""
 
 from __future__ import annotations
 
@@ -116,3 +117,34 @@ def du_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
+
+
+_route = threading.local()
+
+
+def install_route_probe() -> None:
+    """Wrap ``Index._route_wand`` (the step of ``Index.search`` that
+    sends a query to block-max WAND or returns None for the exhaustive
+    executor) so each thread can tell whether its last search routed.
+    Without that method no query is reported as routed."""
+    from ex_elasticlunr_spark import Index
+
+    orig = getattr(Index, "_route_wand", None)
+    if orig is None or getattr(orig, "_perfbench", False):
+        return
+
+    def probe(self, *args, **kw):
+        out = orig(self, *args, **kw)
+        _route.hit = getattr(_route, "hit", False) or out is not None
+        return out
+
+    probe._perfbench = True
+    Index._route_wand = probe
+
+
+def took_route() -> bool:
+    """Whether a search on this thread routed to WAND since the last
+    call; clears the flag."""
+    hit = getattr(_route, "hit", False)
+    _route.hit = False
+    return hit

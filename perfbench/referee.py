@@ -50,11 +50,21 @@ def exhaustive(idx, q: dict, top_k: int = 10):
 
 
 def routed_vs_exhaustive(idx, specs: List[dict], run) -> None:
+    """Compare each spec's public search with the exhaustive executor;
+    ``run.m["referee_routed"]`` counts the comparisons whose public
+    search took the WAND route again."""
+    from . import probes
+
+    routed = 0
     for q in specs:
-        got = rows(search_call(idx, q))
+        probes.took_route()
+        df = search_call(idx, q)
+        routed += probes.took_route() or q["shape"] == "wand_text"
+        got = rows(df)
         want = rows(exhaustive(idx, q))
         run.check(same_results(got, want),
                   "routed != exhaustive for %s %r" % (q["shape"], q["text"]))
+    run.m["referee_routed"] = routed
 
 
 def oracle_rank_identity(spark, seed: int, run, n_queries: int) -> dict:

@@ -133,6 +133,7 @@ def main(argv=None) -> int:
     os.environ["JAVA_TOOL_OPTIONS"] = (
         "-XX:-UsePerfData -Djava.io.tmpdir=" + os.environ["TMPDIR"])
 
+    probes.install_route_probe()
     t_start = time.perf_counter()
     rss_meter = probes.RssMeter(os.getpid())
     spark = spark_session(work)
@@ -178,6 +179,10 @@ def main(argv=None) -> int:
                              == metrics.READ_PHASE[args.workload]]),
         "commits": len(run.commits), "compactions": len(run.compactions),
         "phases": run.phases,
+        "routed": {ph: metrics.routed_fracs(
+            [q for q in run.queries if q["phase"] == ph])
+            for ph in sorted({q["phase"] for q in run.queries})},
+        "referee_routed": run.m.get("referee_routed"),
         "steal_frac": run.host.steal_s / run.host.total_s,
         "wall": metrics.wall(run, args.workload),
         "oracle": oracle, "failures": run.failures[:20],

@@ -7,8 +7,9 @@ measured natively on each of them:
 1. generate the seeded inputs (``gen.py``);
 2. build and durably save the base warehouse
    (``Index.add_documents`` + ``InvertedIndex.save``);
-3. set up a reader ``SETUP_REPS`` times (``Index.load`` + a warm-up
-   query); the median is ``setup_s``;
+3. set up a reader once untimed, then ``SETUP_REPS`` times
+   (``Index.load`` + a warm-up query); the median busy CPU is
+   ``setup_s``;
 4. measure for ``--seconds``:
 
    * ``serve`` — phase A is a closed loop of one client over a seeded
@@ -18,7 +19,8 @@ measured natively on each of them:
    * ``live_ingest`` — writes beside reads: one delta commit
      (``add_documents`` + ``save_delta``) through the set-up index, an
      ``Index.load`` of the new commit and a query for the batch's
-     planted term, then one-client reads across both generations;
+     planted term, then reads across both generations from one client
+     (phase R) and from ``CLIENTS`` threads (phase C);
 
 5. referee checks outside the timed phase (``referee.py``); traced runs
    add a tombstoning commit and a tiered compaction (``delta_coverage``).
@@ -40,13 +42,20 @@ from . import gen, probes, referee
 
 N_BASE = 2000          # base warehouse turns
 N_BATCH = 300          # turns per ingest batch
-CLIENTS = 4            # serve phase B client threads (= cores)
+CLIENTS = 4            # client threads of the concurrent phases (= cores)
+# set-ups timed after an untimed one: right after the build the JVM is
+# still warming the load path, and each open costs less busy CPU than
+# the one before it (7.2 s, 5.3 s, 4.4 s, 3.5 s, 3.1 s, 2.6 s at seed 21)
 SETUP_REPS = 3
 WARM_SHAPES = ("match_or",)
 PHASE_A_SHARE = 2 / 3  # serve: share of --seconds for the one-client loop
-READ_SHARE = 0.6       # live_ingest: reads after the commit, x --seconds
-TOMBSTONES = 10        # docids removed per tombstoning cycle
-ROUTED_SAMPLE = 1      # queries re-run on the exhaustive executor
+READ_SHARE = 0.5       # live_ingest: one-client reads, x --seconds
+CONC_SHARE = 0.3       # live_ingest: CLIENTS-client reads, x --seconds
+TOMB_PER_READ = 4      # top docids of each checked read that get removed
+TOMB_BATCH = 2         # docids of the previous batch that get removed
+# measured queries re-run on the exhaustive executor, by shape group:
+# gate-opened match_or first, then the always-routed multi-clause shapes
+ROUTED_SAMPLE = ((("match_or",), 1), (("bool", "bm25", "wand_text"), 1))
 ORACLE_SAMPLE = 6      # oracle queries per mode in a traced run
 
 
@@ -66,7 +75,7 @@ class Run:
         self.failures: List[str] = []
         self._lock = threading.Lock()
         self.seen_terms: set = set()
-        # {phase, shape, ms, cpu_ms, cold, spec}
+        # {phase, shape, ms, cpu_ms, cold, routed, spec}
         self.queries: List[dict] = []
         self.commits: List[dict] = []   # {commit_ms, cpu_s, visible_ms, turns}
         self.delta_bytes: List[int] = []  # warehouse growth per delta
@@ -133,7 +142,9 @@ def query(run: Run, idx, q: dict, phase: str,
         t0 = time.perf_counter()
         try:
             with run.tracer.span("dsl.search"):
+                probes.took_route()
                 df = referee.search_call(idx, q)
+                routed = probes.took_route() or q["shape"] == "wand_text"
             with run.tracer.span("search.collect"):
                 rows = df.collect()
         except Exception as e:  # a failed request is counted, not raised
@@ -150,7 +161,8 @@ def query(run: Run, idx, q: dict, phase: str,
     run.check(ok, "query %s %r returned a bad page" % (q["shape"], q["text"]))
     with run._lock:
         run.queries.append({"phase": phase, "shape": q["shape"], "ms": ms,
-                            "cpu_ms": cpu_ms, "cold": cold, "spec": q})
+                            "cpu_ms": cpu_ms, "cold": cold,
+                            "routed": routed, "spec": q})
 
 
 def read_blocks(run: Run, idx, stream, phase: str, until: float,
@@ -165,40 +177,38 @@ def read_blocks(run: Run, idx, stream, phase: str, until: float,
         n += 1
 
 
-class Readers:
-    """``clients`` closed-loop clients sharing one ``Index``, pulling
-    from one query stream from ``__enter__`` until ``__exit__``. A
-    client finishes its request in flight when stopped."""
+def read_concurrent(run: Run, idx, stream, phase: str,
+                    until: float) -> None:
+    """``CLIENTS`` closed-loop clients sharing one ``Index`` pull from
+    one stream until ``until``, then the current block is finished, so
+    the phase holds whole blocks (every shape equally often). Busy CPU
+    over the phase per completed query is ``concurrent_cpu_ms``."""
+    lock = threading.Lock()
+    block = len(gen.SHAPES)
+    handed = [0]
 
-    def __init__(self, run: Run, idx, stream, phase: str, clients: int):
-        self.run, self.idx, self.phase = run, idx, phase
-        self.clients = clients
-        self._it = stream
-        self._lock = threading.Lock()
-        self._stop = threading.Event()
-        self.done = 0
+    def next_query() -> Optional[dict]:
+        with lock:
+            n = handed[0]
+            if n and not n % block and time.perf_counter() >= until:
+                return None
+            handed[0] = n + 1
+            return next(stream)
 
-    def _client(self) -> None:
-        while not self._stop.is_set():
-            with self._lock:
-                q = next(self._it)
-            query(self.run, self.idx, q, self.phase, serial=False)
-            with self._lock:
-                self.done += 1
+    def client() -> None:
+        q = next_query()
+        while q is not None:
+            query(run, idx, q, phase, serial=False)
+            q = next_query()
 
-    def __enter__(self) -> "Readers":
-        self._pool = ThreadPoolExecutor(self.clients)
-        self.t0 = time.perf_counter()
-        self._futures = [self._pool.submit(self._client)
-                         for _ in range(self.clients)]
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self._stop.set()
-        for f in self._futures:
+    with probes.CpuMeter() as cpu, ThreadPoolExecutor(CLIENTS) as pool:
+        t0 = time.perf_counter()
+        for f in [pool.submit(client) for _ in range(CLIENTS)]:
             f.result()
-        self._pool.shutdown()
-        self.wall = time.perf_counter() - self.t0
+        wall = time.perf_counter() - t0
+    done = len([q for q in run.queries if q["phase"] == phase])
+    run.m["throughput_qps"] = done / wall
+    run.m["concurrent_cpu_ms"] = cpu.busy_s * 1e3 / max(done, 1)
 
 
 def build_base(run: Run, corpus: gen.Corpus) -> float:
@@ -247,20 +257,23 @@ def table_bytes(wh: str) -> Dict[str, int]:
 
 
 def setup_reader(run: Run, warm: List[dict]):
-    """``SETUP_REPS`` x (``Index.load`` + warm-up queries); the median
-    is ``setup_s``. Returns the last reader and the time the first
-    warm-up query returned."""
-    times = []
+    """One untimed, then ``SETUP_REPS`` timed x (``Index.load`` +
+    warm-up queries); the median busy CPU of the timed ones is
+    ``setup_s``, their median wall time ``wall.setup_s``. Returns the
+    last reader and the time the first warm-up query returned."""
+    walls, cpus = [], []
     idx = first = None
-    for _ in range(SETUP_REPS):
-        with run.tracer.op("op.setup"):
+    for _ in range(SETUP_REPS + 1):
+        with run.tracer.op("op.setup"), probes.CpuMeter() as cpu:
             t0 = time.perf_counter()
             idx = load(run)
             for q in warm:
                 query(run, idx, q, "warm")
                 first = first or time.perf_counter()
-            times.append(time.perf_counter() - t0)
-    run.m["setup_s"] = statistics.median(times)
+            walls.append(time.perf_counter() - t0)
+        cpus.append(cpu.busy_s)
+    run.m["setup_s"] = statistics.median(cpus[1:])
+    run.m["setup_wall_s"] = statistics.median(walls[1:])
     return idx, first
 
 
@@ -350,9 +363,7 @@ def serve(run: Run) -> None:
         t0 = time.perf_counter()
         read_blocks(run, idx, iter(stream_a), "A",
                     t0 + run.seconds * PHASE_A_SHARE, min_blocks=2)
-        with Readers(run, idx, iter(stream_b), "B", CLIENTS) as b:
-            time.sleep(max(0.0, t0 + run.seconds - time.perf_counter()))
-    run.m["throughput_qps"] = b.done / b.wall
+        read_concurrent(run, idx, iter(stream_b), "B", t0 + run.seconds)
     run.phase("measure")
     referee.routed_vs_exhaustive(idx, _sample(run, "A"), run)
     _check_doc_count(run, idx, N_BASE)
@@ -360,38 +371,44 @@ def serve(run: Run) -> None:
         batch, plant = gen.planted_batch(run.seed, 0, N_BATCH, corpus.vocab)
         idx = ingest_cycle(run, 0, batch, plant, None, set(), [],
                            record=False)
-        delta_coverage(run, idx, corpus, 1, (batch.docids, plant),
-                       corpus.docids + batch.docids)
+        delta_coverage(run, idx, corpus, 1, (batch.docids, plant))
     run.phase("referee")
 
 
 def delta_coverage(run: Run, idx, corpus: gen.Corpus, k: int,
-                   prev: tuple, live_ids: List[str]) -> None:
+                   prev: tuple) -> None:
     """Traced runs only, after the measured phase: a commit with
-    tombstones, reads that must not return a tombstoned docid (repeats
-    of measured reads, so their terms are warm), and a
-    ``compact_tiered`` of the two newest generations."""
+    tombstones, reads that must not return a tombstoned docid, and a
+    ``compact_tiered`` of the two newest generations.
+
+    The checked reads repeat two measured reads (so their terms are
+    warm); the tombstones are the top ``TOMB_PER_READ`` docids each of
+    them returns before the commit plus ``TOMB_BATCH`` docids of the
+    previous batch, so a leaked tombstone shows in the reads and in the
+    planted-term check."""
     tombstoned: set = set()
+    reads = [q["spec"] for q in run.queries if q["phase"] in ("A", "R")][:2]
+    tomb = set()
+    for q in reads:
+        tomb.update(r["docid"] for r in
+                    referee.search_call(idx, q).collect()[:TOMB_PER_READ])
+    rng = np.random.default_rng([run.seed, 6])
+    tomb.update(rng.choice(prev[0], TOMB_BATCH, replace=False).tolist())
     batch, plant = gen.planted_batch(run.seed, k, N_BATCH, corpus.vocab)
     idx = ingest_cycle(run, k, batch, plant, prev, tombstoned,
-                       _tomb_pick(run, live_ids), record=False)
-    for q in [q["spec"] for q in run.queries if q["phase"] in "AR"][:2]:
+                       sorted(tomb), record=False)
+    for q in reads:
         query(run, idx, q, "T", tombstoned)
     compact(run, idx)
 
 
-def _tomb_pick(run: Run, docids: List[str]) -> List[str]:
-    rng = np.random.default_rng([run.seed, 6, len(run.delta_bytes)])
-    return sorted(rng.choice(docids, TOMBSTONES, replace=False).tolist())
-
-
 def live_ingest(run: Run) -> None:
     """Writes beside reads: one delta commit through the set-up index
-    (the writer), made visible to a reopened reader, then
-    ``READ_SHARE`` x ``--seconds`` of reads across the new generation
-    from ``CLIENTS`` clients."""
+    (the writer), made visible to a reopened reader, then reads across
+    the new generation: ``READ_SHARE`` x ``--seconds`` from one client,
+    ``CONC_SHARE`` x ``--seconds`` from ``CLIENTS`` clients."""
     corpus = gen.Corpus(run.seed, N_BASE)
-    warm, stream, _ = _streams(run, corpus)
+    warm, stream, stream_c = _streams(run, corpus)
     run.phase("generate")
     build_base(run, corpus)
     run.phase("build")
@@ -401,28 +418,31 @@ def live_ingest(run: Run) -> None:
     with probes.CpuMeter() as run.host:
         idx = ingest_cycle(run, 0, batch, plant, None, set(), [],
                            writer=writer)
-        r0 = time.perf_counter()
         read_blocks(run, idx, iter(stream), "R",
-                    r0 + run.seconds * READ_SHARE)
-        reads_s = time.perf_counter() - r0
-    run.m["throughput_qps"] = len([q for q in run.queries
-                                   if q["phase"] == "R"]) / reads_s
+                    time.perf_counter() + run.seconds * READ_SHARE)
+        read_concurrent(run, idx, iter(stream_c), "C",
+                        time.perf_counter() + run.seconds * CONC_SHARE)
     run.phase("measure")
     referee.routed_vs_exhaustive(idx, _sample(run, "R"), run)
     live_ids = corpus.docids + batch.docids
     _check_doc_count(run, idx, len(live_ids))
     if run.tracer.enabled:
-        delta_coverage(run, idx, corpus, 1, (batch.docids, plant), live_ids)
+        delta_coverage(run, idx, corpus, 1, (batch.docids, plant))
     run.phase("referee")
 
 
 def _sample(run: Run, phase: str) -> List[dict]:
-    """A seeded sample of the phase's query specs for the referee."""
-    specs = [q["spec"] for q in run.queries if q["phase"] == phase]
+    """A seeded sample of the phase's distinct routed query specs for
+    the referee, ``ROUTED_SAMPLE`` per shape group."""
     rng = np.random.default_rng([run.seed, 7])
-    pick = rng.choice(len(specs), min(ROUTED_SAMPLE, len(specs)),
-                      replace=False)
-    return [specs[i] for i in sorted(pick)]
+    out = []
+    for shapes, n in ROUTED_SAMPLE:
+        specs = list({q["spec"]["text"] + q["shape"]: q["spec"]
+                      for q in run.queries if q["phase"] == phase
+                      and q["routed"] and q["shape"] in shapes}.values())
+        pick = rng.choice(len(specs), min(n, len(specs)), replace=False)
+        out += [specs[i] for i in sorted(pick)]
+    return out
 
 
 def _check_doc_count(run: Run, idx, want: int) -> None:
